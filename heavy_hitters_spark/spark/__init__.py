@@ -1,7 +1,6 @@
 from .aggregate import (
     build_sketch,
     build_sketch_checkpointed,
-    build_sketch_treeaggregate,
     partial_states,
     tree_merge,
 )
@@ -11,7 +10,6 @@ from .session import get_spark
 __all__ = [
     "build_sketch",
     "build_sketch_checkpointed",
-    "build_sketch_treeaggregate",
     "partial_states",
     "tree_merge",
     "get_spark",

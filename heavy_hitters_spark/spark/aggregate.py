@@ -16,6 +16,14 @@ is a plain DataFrame with checkpointable rows:
       pattern expressed on DataFrames so intermediate rounds are
       inspectable and durable.
 
+``Build`` is the one build engine over any stage-1 partials DataFrame
+(``build_sketch`` here, ``fused.TokenSketchBuilder`` for raw text):
+under a local[*] master the tasks publish their states into a
+side-channel directory that ``DirFold`` merges while the map stage
+runs; otherwise ``run()`` takes the ``tree_merge`` path above. Both
+paths return the same (sketch, metrics) pair with the same metrics
+record.
+
 All sketches here merge associatively (linear tables / lattice maxes /
 bound-preserving summaries), so the merge-tree shape never changes the
 answer beyond each sketch's documented invariance class — verified by
@@ -34,6 +42,8 @@ Scale notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 import time
 from collections.abc import Callable, Iterator
 
@@ -82,14 +92,10 @@ def publish_state_file(side_dir: str, packed: bytes, ctx) -> None:
 def resolve_side_channel(df: DataFrame, side_channel: bool | None) -> bool:
     """None -> True under a local[*] master (executors share the
     driver's filesystem); on a cluster the side channel needs a shared
-    directory, so it stays opt-in there. ``SKETCH_SIDECH=0|1`` in the
-    environment overrides the default (kill-switch for A/B isolation);
-    an explicit ``side_channel=`` argument still wins over both."""
+    directory, so it stays opt-in there. An explicit ``side_channel=``
+    argument wins."""
     if side_channel is not None:
         return side_channel
-    env = os.environ.get("SKETCH_SIDECH")
-    if env in ("0", "1"):
-        return env == "1"
     return df.sparkSession.conf.get("spark.master", "").startswith("local")
 
 
@@ -257,14 +263,17 @@ def tree_merge(partials: DataFrame, fanin: int = 16, n_hint: int | None = None) 
     rows = cur.collect()
     if not rows:
         raise ValueError("no partial states (empty input?)")
-    acc = _driver_fold([r["state"] for r in rows])
-    metrics = {
+    return _driver_fold([r["state"] for r in rows]), _metrics(rows)
+
+
+def _metrics(rows: list) -> dict:
+    """The build metrics record, summed over the collected partial rows."""
+    return {
         "n_rows": sum(r["n_rows"] for r in rows),
         "n_updates": sum(r["n_updates"] for r in rows),
         "wall_ms": sum(r["wall_ms"] for r in rows),
         "n_partials": len(rows),
     }
-    return acc, metrics
 
 
 class DirFold:
@@ -372,45 +381,83 @@ def _driver_fold(blobs: list) -> Sketch:
     return sks[0]
 
 
+class Build:
+    """Prepared sketch build: analyze the partials plan ONCE, run it
+    many times (the micro-batch / scheduled-rebuild production shape).
+
+    ``make_partials(side_dir)`` returns the stage-1 partials DataFrame
+    (``PARTIAL_SCHEMA`` rows); its tasks publish their packed states
+    into ``side_dir`` when it is not None. ``side_channel`` resolves
+    once (``resolve_side_channel``): when on, ``run()`` empties the
+    directory and folds the published states with ``DirFold`` while
+    the map stage runs, so the collect+fold serial tail disappears;
+    when off, ``run()`` calls ``tree_merge`` (``n_hint`` defaults to the
+    input's partition count, looked up only on that path). Each run
+    unpacks a fresh sketch from the template bytes in every task, so
+    runs are independent and both paths give byte-identical sketches.
+    ``close()`` (or leaving the ``with`` block) removes the directory."""
+
+    def __init__(
+        self,
+        df: DataFrame,
+        make_partials: Callable[[str | None], DataFrame],
+        side_channel: bool | None = None,
+        fanin: int = 16,
+        n_hint: int | None = None,
+    ) -> None:
+        self._df = df
+        self._fanin = fanin
+        self._n_hint = n_hint
+        self._side_dir = (
+            tempfile.mkdtemp(prefix="sketch_sidech_") if resolve_side_channel(df, side_channel) else None
+        )
+        try:
+            self._partials = make_partials(self._side_dir)
+        except Exception:
+            self.close()
+            raise
+
+    def run(self) -> tuple[Sketch, dict]:
+        if self._side_dir is None:
+            if self._n_hint is None:
+                self._n_hint = self._df.rdd.getNumPartitions()
+            return tree_merge(self._partials, fanin=self._fanin, n_hint=self._n_hint)
+        for name in os.listdir(self._side_dir):
+            os.unlink(os.path.join(self._side_dir, name))
+        fold = DirFold(self._side_dir)
+        rows = self._partials.collect()
+        return fold.finish({r["part_id"] for r in rows}), _metrics(rows)
+
+    def close(self) -> None:
+        if self._side_dir is not None:
+            shutil.rmtree(self._side_dir, ignore_errors=True)
+
+    def __enter__(self) -> "Build":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+
 def build_sketch(
     df: DataFrame,
     template: Sketch,
     id_col: str = "id",
     weight_col: str | None = None,
     fanin: int = 16,
-    with_lineage: bool = False,
     side_channel: bool | None = None,
 ) -> tuple[Sketch, dict]:
-    """End-to-end: partial build + tree merge. ``df`` must already carry
-    the uint32 id column (see spark.keys.key_id_col).
+    """End-to-end: partial build + merge through ``Build``. ``df`` must
+    already carry the uint32 id column (see spark.keys.key_id_col).
 
-    ``side_channel=None`` resolves to True under local[*] masters:
-    tasks publish their packed state via atomic rename and DirFold
-    merges them while the map stage runs, removing the collect+fold
-    serial tail (byte-identical result; see fused.build_token_sketch)."""
-    if resolve_side_channel(df, side_channel):
-        import shutil
-        import tempfile
+    ``side_channel=None`` resolves to True under local[*] masters
+    (DirFold streaming merge; byte-identical to the tree merge)."""
 
-        side_dir = tempfile.mkdtemp(prefix="sketch_sidech_")
-        try:
-            partials = partial_states(df, template, id_col, weight_col, with_lineage, side_dir=side_dir)
-            fold = DirFold(side_dir)
-            rows = partials.collect()
-            if not rows:
-                fold.finish(set())  # raises "empty input"
-            sk = fold.finish({r["part_id"] for r in rows})
-            metrics = {
-                "n_rows": sum(r["n_rows"] for r in rows),
-                "n_updates": sum(r["n_updates"] for r in rows),
-                "wall_ms": sum(r["wall_ms"] for r in rows),
-                "n_partials": len(rows),
-            }
-            return sk, metrics
-        finally:
-            shutil.rmtree(side_dir, ignore_errors=True)
-    partials = partial_states(df, template, id_col, weight_col, with_lineage)
-    return tree_merge(partials, fanin=fanin, n_hint=df.rdd.getNumPartitions())
+    def make_partials(side_dir: str | None) -> DataFrame:
+        return partial_states(df, template, id_col, weight_col, with_lineage=False, side_dir=side_dir)
+
+    with Build(df, make_partials, side_channel=side_channel, fanin=fanin) as b:
+        return b.run()
 
 
 # ----------------------------------------------------------------------
@@ -459,38 +506,3 @@ def build_sketch_checkpointed(
     metrics["resumed_files_skipped"] = len(input_paths) - len(missing)
     metrics["files_processed_this_run"] = len(missing)
     return sketch, metrics
-
-
-# ----------------------------------------------------------------------
-# RDD treeAggregate reference implementation (tests cross-check only).
-# ----------------------------------------------------------------------
-
-
-def build_sketch_treeaggregate(
-    df: DataFrame,
-    template: Sketch,
-    id_col: str = "id",
-    weight_col: str | None = None,
-    depth: int = 2,
-) -> Sketch:
-    """RDD.treeAggregate over serialized states — the canonical merge
-    shape our DataFrame tree_merge must agree with (slow row-at-a-time
-    Python path; used only to validate the fast path in tests)."""
-    import numpy as np
-
-    tb = template.to_bytes()
-    cols = [id_col] + ([weight_col] if weight_col else [])
-
-    def seq(state_bytes: bytes, rows: list) -> bytes:
-        sk = Sketch.from_bytes(state_bytes)
-        ids = np.array([r[0] for r in rows], dtype=np.uint64)
-        w = np.array([r[1] for r in rows], dtype=np.int64) if weight_col else None
-        if len(ids):
-            sk.update_batch(ids, w)
-        return sk.to_bytes()
-
-    def comb(a: bytes, b: bytes) -> bytes:
-        return Sketch.from_bytes(a).merge(Sketch.from_bytes(b)).to_bytes()
-
-    rdd = df.select(*cols).rdd.glom().map(lambda rows: seq(tb, rows))
-    return Sketch.from_bytes(rdd.treeAggregate(tb, comb, comb, depth=depth))

@@ -17,6 +17,11 @@ DOCUMENT and does tokenization in pyarrow C kernels inside the worker:
 The ids are the same xxhash64&mask32 ids as spark.keys.key_id_col, so
 fused-built sketches are interchangeable with explode-built ones
 (asserted in tests/test_fused.py).
+
+The merge side is aggregate's single build engine: ``TokenSketchBuilder``
+is an ``aggregate.Build`` over these partials, so it uses the
+side-channel DirFold under local[*] masters and ``tree_merge``
+otherwise; ``build_token_sketch`` is its one-shot form.
 """
 
 from __future__ import annotations
@@ -29,10 +34,12 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..core.base import Sketch, pack_state
-from .aggregate import PARTIAL_SCHEMA, tree_merge
+from .aggregate import PARTIAL_SCHEMA, Build
+
+_ARROW_PARTIAL_SCHEMA = to_arrow_schema(PARTIAL_SCHEMA)
 
 
 def _fused_fn(
@@ -70,10 +77,6 @@ def _fused_fn(
         from ..core import memtune  # noqa: F401
         from ..core.base import pack_state_bytes, unpack_state
         from .keys import MASK32, xxh64
-
-        prof_dir = os.environ.get("SKETCH_PROF_DIR")
-        prof = {"enter_epoch": time.time()} if prof_dir else None
-        t_serve = t_kernel = 0.0
 
         sk = unpack_state(template_bytes)
         t0 = time.perf_counter()
@@ -114,13 +117,7 @@ def _fused_fn(
                         reader = pa.ipc.open_stream(pa.BufferReader(blob.as_buffer()))
                         yield from reader
 
-        src = text_batches()
-        while True:
-            tb0 = time.perf_counter()
-            batch = next(src, None)
-            t_serve += time.perf_counter() - tb0
-            if batch is None:
-                break
+        for batch in text_batches():
             texts = batch.column(text_col)
             toks = pc.list_flatten(pc.split_pattern(texts, split))
             if len(toks) == 0:
@@ -174,32 +171,13 @@ def _fused_fn(
             n_rows += len(texts)
             n_upd += n_batch
         ctx = TaskContext.get()
-        t_loop = time.perf_counter() - t0
         raw = sk.to_bytes()
-        t_tb = time.perf_counter() - t0 - t_loop
         state = pack_state_bytes(raw)  # ship packed; account raw (SPACE)
-        t_pk = time.perf_counter() - t0 - t_loop - t_tb
         if side_dir is not None:
             from .aggregate import publish_state_file
 
             publish_state_file(side_dir, state, ctx)
             state = b""
-        if prof is not None:
-            prof.update(
-                part=ctx.partitionId() if ctx else -1,
-                pid=os.getpid(),
-                serve_s=round(t_serve, 4),
-                kernel_s=round(t_loop - t_serve, 4),
-                to_bytes_s=round(t_tb, 4),
-                pack_s=round(t_pk, 4),
-                publish_s=round(time.perf_counter() - t0 - t_loop - t_tb - t_pk, 4),
-                exit_epoch=time.time(),
-            )
-            import json as _json
-
-            pn = os.path.join(prof_dir, f"prof_{prof['part']}_{os.getpid()}_{int(time.time()*1e6)}.json")
-            with open(pn, "w") as pf:
-                _json.dump(prof, pf)
         yield pa.RecordBatch.from_pydict(
             {
                 "part_id": [ctx.partitionId() if ctx else -1],
@@ -210,20 +188,51 @@ def _fused_fn(
                 "state_bytes": [len(raw)],
                 "files": [""],
             },
-            schema=pa.schema(
-                [
-                    ("part_id", pa.int64()),
-                    ("state", pa.binary()),
-                    ("n_rows", pa.int64()),
-                    ("n_updates", pa.int64()),
-                    ("wall_ms", pa.float64()),
-                    ("state_bytes", pa.int64()),
-                    ("files", pa.string()),
-                ]
-            ),
+            schema=_ARROW_PARTIAL_SCHEMA,
         )
 
     return fn
+
+
+class TokenSketchBuilder(Build):
+    """Prepared repeated fused build: analyze the plan ONCE, run it many
+    times (the micro-batch / scheduled-rebuild production shape).
+
+    ``build_token_sketch`` constructs a fresh DataFrame per call, so
+    every build re-pays driver-side analysis + task-closure setup —
+    measured ~0.35 s of pure per-job serial on this host (time from
+    action start to the first task entering the worker: 0.45 s cold
+    vs 0.09-0.12 s re-collecting the same DataFrame object, whose
+    analyzed/optimized plan Spark caches). For a one-shot build that
+    cost is irrelevant; for repeated builds over a stable input
+    (streaming micro-batches, per-window rebuilds, benchmarking) it is
+    a pure Amdahl term, so this builder keeps ONE partials DataFrame
+    with a FIXED side-channel directory and re-collects it per run
+    (``aggregate.Build``). States are byte-identical to
+    ``build_token_sketch`` (same kernel closure, pinned in
+    tests/test_fused.py)."""
+
+    def __init__(
+        self,
+        df: DataFrame,
+        template: Sketch,
+        text_col: str = "text",
+        fanin: int = 64,
+        n_hint: int | None = None,
+        blob_col: str | None = None,
+        side_channel: bool | None = None,
+        path_col: str | None = None,
+    ) -> None:
+        tb = pack_state(template)
+        col = blob_col or path_col or text_col
+
+        def make_partials(side_dir: str | None) -> DataFrame:
+            return df.select(col).mapInArrow(
+                _fused_fn(tb, text_col, blob_col=blob_col, side_dir=side_dir, path_col=path_col),
+                PARTIAL_SCHEMA,
+            )
+
+        super().__init__(df, make_partials, side_channel=side_channel, fanin=fanin, n_hint=n_hint)
 
 
 def build_token_sketch(
@@ -251,138 +260,11 @@ def build_token_sketch(
     map stage runs) is strictly better than collect+fold. On a cluster
     it stays False unless the caller opts in (requires a shared
     filesystem; same requirement as build_sketch_checkpointed)."""
-    col = blob_col or path_col or text_col
-    from .aggregate import resolve_side_channel
-
-    if resolve_side_channel(df, side_channel):
-        return _build_side_channel(df, template, text_col, col, blob_col, path_col)
-    partials = df.select(col).mapInArrow(
-        _fused_fn(pack_state(template), text_col, blob_col=blob_col, path_col=path_col),
-        PARTIAL_SCHEMA,
-    )
-    if n_hint is None:
-        n_hint = df.rdd.getNumPartitions()
-    return tree_merge(partials, fanin=fanin, n_hint=n_hint)
-
-
-def _build_side_channel(df, template, text_col, col, blob_col, path_col=None):
-    """Streaming-merge build: tasks publish their packed state through
-    an atomic file rename in a driver-visible directory and the driver
-    folds states AS THEY ARRIVE (aggregate.DirFold), overlapping the
-    entire merge with the map stage instead of paying collect+fold as a
-    serial tail after the last task. Requires a filesystem both driver
-    and executors can reach — free in local mode; on a cluster this is
-    the same shared-storage requirement as build_sketch_checkpointed's
-    durable partials (whose files double as a resume checkpoint)."""
-    import shutil
-    import tempfile
-
-    from .aggregate import DirFold
-
-    side_dir = tempfile.mkdtemp(prefix="sketch_sidech_")
-    try:
-        partials = df.select(col).mapInArrow(
-            _fused_fn(
-                pack_state(template), text_col, blob_col=blob_col,
-                side_dir=side_dir, path_col=path_col,
-            ),
-            PARTIAL_SCHEMA,
-        )
-        fold = DirFold(side_dir)
-        rows = partials.collect()
-        if not rows:
-            fold.finish(set())  # raises "empty input"
-        sk = fold.finish({r["part_id"] for r in rows})
-        metrics = {
-            "n_rows": sum(r["n_rows"] for r in rows),
-            "n_updates": sum(r["n_updates"] for r in rows),
-            "wall_ms": sum(r["wall_ms"] for r in rows),
-            "n_partials": len(rows),
-        }
-        return sk, metrics
-    finally:
-        shutil.rmtree(side_dir, ignore_errors=True)
-
-
-class TokenSketchBuilder:
-    """Prepared repeated build: analyze the plan ONCE, run it many
-    times (the micro-batch / scheduled-rebuild production shape).
-
-    ``build_token_sketch`` constructs a fresh DataFrame per call, so
-    every build re-pays driver-side analysis + task-closure setup —
-    measured ~0.35 s of pure per-job serial on this host (time from
-    action start to the first task entering the worker: 0.45 s cold
-    vs 0.09-0.12 s re-collecting the same DataFrame object, whose
-    analyzed/optimized plan Spark caches). For a one-shot build that
-    cost is irrelevant; for repeated builds over a stable input
-    (streaming micro-batches, per-window rebuilds, benchmarking) it is
-    a pure Amdahl term, so this builder keeps ONE partials DataFrame
-    with a FIXED side-channel directory and re-collects it per run.
-    Each run still unpacks a fresh sketch from the template bytes in
-    every task — runs are independent; states are byte-identical to
-    ``build_token_sketch`` (same kernel closure, pinned in
-    tests/test_fused.py)."""
-
-    def __init__(
-        self,
-        df: DataFrame,
-        template: Sketch,
-        text_col: str = "text",
-        fanin: int = 64,
-        n_hint: int | None = None,
-        blob_col: str | None = None,
-        side_channel: bool | None = None,
-        path_col: str | None = None,
-    ) -> None:
-        import tempfile
-
-        from .aggregate import resolve_side_channel
-
-        col = blob_col or path_col or text_col
-        self._fanin = fanin
-        self._n_hint = n_hint if n_hint is not None else df.rdd.getNumPartitions()
-        self._side = resolve_side_channel(df, side_channel)
-        self._side_dir = tempfile.mkdtemp(prefix="sketch_sidech_") if self._side else None
-        self._partials = df.select(col).mapInArrow(
-            _fused_fn(
-                pack_state(template), text_col, blob_col=blob_col,
-                side_dir=self._side_dir, path_col=path_col,
-            ),
-            PARTIAL_SCHEMA,
-        )
-
-    def run(self) -> tuple[Sketch, dict]:
-        from .aggregate import DirFold
-
-        if not self._side:
-            return tree_merge(self._partials, fanin=self._fanin, n_hint=self._n_hint)
-        for name in os.listdir(self._side_dir):
-            os.unlink(os.path.join(self._side_dir, name))
-        fold = DirFold(self._side_dir)
-        rows = self._partials.collect()
-        if not rows:
-            fold.finish(set())  # raises "empty input"
-        sk = fold.finish({r["part_id"] for r in rows})
-        metrics = {
-            "n_rows": sum(r["n_rows"] for r in rows),
-            "n_updates": sum(r["n_updates"] for r in rows),
-            "wall_ms": sum(r["wall_ms"] for r in rows),
-            "n_partials": len(rows),
-        }
-        return sk, metrics
-
-    def close(self) -> None:
-        import shutil
-
-        if self._side_dir is not None:
-            shutil.rmtree(self._side_dir, ignore_errors=True)
-            self._side_dir = None
-
-    def __enter__(self) -> "TokenSketchBuilder":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
+    with TokenSketchBuilder(
+        df, template, text_col=text_col, fanin=fanin, n_hint=n_hint,
+        blob_col=blob_col, side_channel=side_channel, path_col=path_col,
+    ) as b:
+        return b.run()
 
 
 def pack_arrow_blobs(df: DataFrame, cols: list[str] | None = None) -> DataFrame:

@@ -157,6 +157,9 @@ def test_main_end_to_end_with_stubbed_runs(tmp_path, monkeypatch, capsys):
     bdir.mkdir()
     monkeypatch.setattr(bench, "BENCH_DIR", str(bdir))
     monkeypatch.setattr(bench, "ensure_pages", lambda: None)
+    # main() derives its levels from CPUS; 32 gives local[2] vs local[8],
+    # the levels fake_run tells apart, on any host
+    monkeypatch.setattr(bench, "CPUS", 32)
     calls = {"n": 0}
 
     def fake_run(master, with_phases=False, n_timed=4):

@@ -4,6 +4,7 @@ treeAggregate cross-check; checkpoint/resume; lineage + metrics."""
 
 import glob
 import os
+import tempfile
 
 import numpy as np
 import pytest
@@ -13,7 +14,6 @@ from heavy_hitters_spark.core import CountMin, HLL, SeedStream, Sketch
 from heavy_hitters_spark.spark import (
     build_sketch,
     build_sketch_checkpointed,
-    build_sketch_treeaggregate,
     key_id,
     key_id_col,
     partial_states,
@@ -37,6 +37,28 @@ def _bulk_cm(ids_df):
 
 def _tmpl():
     return CountMin(width=1 << 12, depth=5, seed_stream=SeedStream(1, 2))
+
+
+def build_sketch_treeaggregate(df, template: Sketch, id_col="id", weight_col=None, depth=2) -> Sketch:
+    """RDD.treeAggregate over serialized states — the canonical merge
+    shape our DataFrame tree_merge must agree with (slow row-at-a-time
+    Python path; the reference the fast path is checked against)."""
+    tb = template.to_bytes()
+    cols = [id_col] + ([weight_col] if weight_col else [])
+
+    def seq(state_bytes: bytes, rows: list) -> bytes:
+        sk = Sketch.from_bytes(state_bytes)
+        ids = np.array([r[0] for r in rows], dtype=np.uint64)
+        w = np.array([r[1] for r in rows], dtype=np.int64) if weight_col else None
+        if len(ids):
+            sk.update_batch(ids, w)
+        return sk.to_bytes()
+
+    def comb(a: bytes, b: bytes) -> bytes:
+        return Sketch.from_bytes(a).merge(Sketch.from_bytes(b)).to_bytes()
+
+    rdd = df.select(*cols).rdd.glom().map(lambda rows: seq(tb, rows))
+    return Sketch.from_bytes(rdd.treeAggregate(tb, comb, comb, depth=depth))
 
 
 def test_distributed_equals_bulk(spark, ids_df):
@@ -131,23 +153,45 @@ def test_driver_side_key_parity(spark):
         assert key_id(r["token"]) == r["id"]
 
 
-def test_side_channel_env_killswitch(spark, ids_df, monkeypatch):
-    """SKETCH_SIDECH=0|1 overrides the local-master default (A/B
-    isolation hook, tools/exp_sidech_query.py); an explicit argument
-    still wins over the environment."""
+def _side_dirs():
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "sketch_sidech_*")))
+
+
+def test_side_channel_default_and_explicit_off(spark, ids_df):
+    """The side channel defaults on under a local master; an explicit
+    ``side_channel=False`` is respected."""
     from heavy_hitters_spark.spark.aggregate import resolve_side_channel
 
-    monkeypatch.delenv("SKETCH_SIDECH", raising=False)
     assert resolve_side_channel(ids_df, None) is True  # local master
-    monkeypatch.setenv("SKETCH_SIDECH", "0")
-    assert resolve_side_channel(ids_df, None) is False
-    assert resolve_side_channel(ids_df, True) is True  # arg beats env
-    monkeypatch.setenv("SKETCH_SIDECH", "1")
-    assert resolve_side_channel(ids_df, None) is True
     assert resolve_side_channel(ids_df, False) is False
-    # both routes produce byte-identical states
-    monkeypatch.setenv("SKETCH_SIDECH", "0")
-    sk_off, _ = build_sketch(ids_df.repartition(8), _tmpl(), id_col="id")
-    monkeypatch.setenv("SKETCH_SIDECH", "1")
-    sk_on, _ = build_sketch(ids_df.repartition(8), _tmpl(), id_col="id")
-    assert sk_off.to_bytes() == sk_on.to_bytes()
+
+
+@pytest.mark.parametrize("side_channel", [True, False])
+@pytest.mark.parametrize("fused", [False, True], ids=["build_sketch", "build_token_sketch"])
+def test_empty_input_raises_and_cleans_up(spark, fused, side_channel):
+    """A zero-partition input fails loudly on both merge paths of both
+    build entry points, and leaves no side-channel directory behind."""
+    from heavy_hitters_spark.spark.fused import build_token_sketch
+
+    before = _side_dirs()
+    schema = "text string" if fused else "id long"
+    empty = spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+    assert empty.rdd.getNumPartitions() == 0
+    with pytest.raises(ValueError, match="no partial states"):
+        if fused:
+            build_token_sketch(empty, _tmpl(), text_col="text", side_channel=side_channel)
+        else:
+            build_sketch(empty, _tmpl(), id_col="id", side_channel=side_channel)
+    assert _side_dirs() <= before
+
+
+def test_bad_plan_cleans_up_side_dir(spark):
+    """A partials plan that fails analysis (missing id column) raises
+    and leaves no side-channel directory behind."""
+    from pyspark.errors import AnalysisException
+
+    before = _side_dirs()
+    df = spark.createDataFrame([(1,)], "other long")
+    with pytest.raises(AnalysisException):
+        build_sketch(df, _tmpl(), id_col="id", side_channel=True)
+    assert _side_dirs() <= before
