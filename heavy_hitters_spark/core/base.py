@@ -38,20 +38,12 @@ class Sketch:
 
     TYPE = "abstract"
 
-    # Whether feeding a pre-aggregated (unique_items, counts) batch is
-    # equivalent to feeding the raw stream. True for linear sketches
-    # (CM/CS: counter sums identical), set-semantics sketches
-    # (HLL/Bloom: duplicates are no-ops) and summaries whose contract
-    # is bounds-level rather than byte-level (MG, t-digest — their
-    # REPRESENTATION is already order/partition-dependent, only the
-    # error bound is the contract). False where weights are not
-    # supported exactly (KLL ignores ``counts``). Map-side combiners
-    # (spark/fused.py) consult this to route duplicates-collapsed
-    # batches through the weighted path.
-    PREAGG_SAFE = True
-
     # --- updates -----------------------------------------------------
     def update_batch(self, items: np.ndarray, counts: np.ndarray | None = None) -> None:
+        """Fold ``items`` in, ``counts[i]`` occurrences of ``items[i]``
+        (one each when ``None``). Map-side combiners (spark/fused.py)
+        feed every sketch pre-aggregated (unique item, count) batches,
+        which each type folds as it would the raw stream."""
         raise NotImplementedError
 
     # --- merge (associative; same seeds required) --------------------

@@ -15,6 +15,12 @@ bound-preserving) — the previous python-list compactors allocated one
 PyFloat per update (~3M objects per build partition), which both
 dominated the kernel wall and drove allocator churn.
 
+Weighted batches ``update_batch(items, counts)`` run the same cascade
+over (value, count) runs of the sorted stream without expanding it, so
+a pre-aggregated batch of ~10k (id, count) pairs costs O(pairs) per
+halving instead of a sort of the ~500k raw ids, and leaves the
+byte-identical state of ``update_batch(np.repeat(items, counts))``.
+
 Rank error: |est_rank - true_rank| <= eps*n with eps ~ O(1/k)
 (empirically ~1.5/k at k=200 for the constants used here).
 """
@@ -35,9 +41,6 @@ _EMPTY = np.empty(0, dtype=np.float64)
 @register
 class KLL(Sketch):
     TYPE = "kll"
-    # update_batch ignores ``counts`` (unweighted sampler): collapsing
-    # duplicates before the update would change the sampled stream
-    PREAGG_SAFE = False
 
     def __init__(self, k: int = 200, seed: int = 0x5EED) -> None:
         self.k = int(k)
@@ -85,7 +88,13 @@ class KLL(Sketch):
         self.compactors[h + 1] = np.concatenate([self.compactors[h + 1], promoted])
 
     # ------------------------------------------------------------------
-    def update_batch(self, items, counts=None) -> None:  # noqa: ARG002 (unweighted)
+    def update_batch(self, items, counts=None) -> None:
+        """Fold ``items`` in; ``counts[i]`` (non-negative) repeats
+        ``items[i]`` that many times. The weighted form is byte-identical
+        to ``update_batch(np.repeat(items, counts))``."""
+        if counts is not None:
+            self._update_runs(items, counts)
+            return
         vals = np.asarray(items, dtype=np.float64)
         self.n += len(vals)
         # fold the batch with ONE sort + cascaded halvings: each halving
@@ -103,6 +112,40 @@ class KLL(Sketch):
             h += 1
         self._grow_to(h)
         self.compactors[h] = np.concatenate([self.compactors[h], arr])
+        self._compress()
+
+    def _update_runs(self, items, counts) -> None:
+        """The unweighted cascade over the sorted stream
+        ``np.repeat(vals, cnt)``, kept as (value, count) runs: a halving
+        ``stream[b::2]`` keeps ``(end+1-b)//2 - (start+1-b)//2`` items of
+        the run at stream positions [start, end), the odd tail takes one
+        item off the last run, and each halving draws the same one coin.
+        Only the final <= 2k survivors are materialized."""
+        cnt = np.asarray(counts, dtype=np.int64)
+        if (cnt < 0).any():
+            raise ValueError("KLL counts must be non-negative")
+        vals = np.asarray(items, dtype=np.float64)
+        order = np.argsort(vals, kind="stable")
+        order = order[cnt[order] > 0]
+        vals, cnt = vals[order], cnt[order]
+        total = int(cnt.sum())
+        self.n += total
+        h = 0
+        while total > max(2 * self.k, 4):
+            self._grow_to(h)
+            if total % 2 == 1:  # odd tail stays at this level
+                self.compactors[h] = np.concatenate([self.compactors[h], vals[-1:]])
+                cnt[-1] -= 1
+                total -= 1
+            b = self._coin()
+            end = np.cumsum(cnt)
+            cnt = (end + 1 - b) // 2 - (end - cnt + 1 - b) // 2
+            keep = cnt > 0
+            vals, cnt = vals[keep], cnt[keep]
+            total //= 2  # even here, so either phase keeps half
+            h += 1
+        self._grow_to(h)
+        self.compactors[h] = np.concatenate([self.compactors[h], np.repeat(vals, cnt)])
         self._compress()
 
     def _weighted(self) -> tuple[np.ndarray, np.ndarray]:

@@ -8,10 +8,12 @@ high core counts and kills scaling). This fused path ships one row per
 DOCUMENT and does tokenization in pyarrow C kernels inside the worker:
 
   scan (column-pruned text)
-    -> mapInArrow: split_pattern -> list_flatten -> dictionary_encode
-       (all Arrow C) -> xxh64 only on NEW dictionary tokens (memoized
-       token->id dict, Zipf vocab makes the hit rate ~100%)
-    -> numpy sketch update on the id array
+    -> mapInArrow: split_pattern -> list_flatten -> value_counts
+       (all Arrow C) -> keys.xxh64_array over the batch vocabulary
+       (numpy, no per-token Python)
+    -> one sketch update per batch on the (unique id, count) pairs
+       (a Zipf batch of ~500k tokens collapses to ~10k pairs; every
+       sketch, KLL included, folds them exactly as the raw id stream)
     -> one serialized state row per partition
 
 The ids are the same xxhash64&mask32 ids as spark.keys.key_id_col, so
@@ -76,25 +78,11 @@ def _fused_fn(
 
         from ..core import memtune  # noqa: F401
         from ..core.base import pack_state_bytes, unpack_state
-        from .keys import MASK32, xxh64
+        from . import keys
 
         sk = unpack_state(template_bytes)
         t0 = time.perf_counter()
         n_rows = n_upd = 0
-        memo: dict[str, int] = {}
-        # map-side combine routing: sketches for which a pre-aggregated
-        # (unique_ids, counts) batch is equivalent to the raw token
-        # stream take the weighted path over ~vocab-sized batches (a
-        # Zipf token batch of ~500k collapses to ~10k uniques, cutting
-        # the per-sketch hash+scatter work and the memory traffic by
-        # that ratio); the rest (KLL: unweighted sampler) get the raw
-        # id array. Duplicate collapse happens once per Arrow batch via
-        # the dictionary indices that tokenization already produced.
-        from ..core.multi import MultiSketch
-
-        children = list(sk.sketches.values()) if isinstance(sk, MultiSketch) else [sk]
-        preagg_targets = [s for s in children if s.PREAGG_SAFE]
-        raw_targets = [s for s in children if not s.PREAGG_SAFE]
 
         def text_batches():
             for b in batches:
@@ -122,54 +110,29 @@ def _fused_fn(
             toks = pc.list_flatten(pc.split_pattern(texts, split))
             if len(toks) == 0:
                 continue
-            d = toks.dictionary_encode()
-            if isinstance(d, pa.ChunkedArray):
-                d = d.combine_chunks()
-            vocab = d.dictionary.to_pylist()
-            lut = np.empty(len(vocab), dtype=np.uint64)
-            empty_j = -1
-            for j, tok in enumerate(vocab):
-                if tok == "":
-                    empty_j = j
-                h = memo.get(tok)
-                if h is None:
-                    h = xxh64(tok.encode()) & MASK32
-                    memo[tok] = h
-                lut[j] = h
-            idx = d.indices.to_numpy(zero_copy_only=False)
-            if preagg_targets:
-                uc = np.bincount(idx, minlength=len(lut)).astype(np.int64)
-                u = lut
-                if empty_j >= 0:
-                    # drop empty-string tokens (parity with keys.tokens
-                    # filter) by DICTIONARY slot, so a real token whose
-                    # hash collides with h("") survives
-                    keep = np.ones(len(u), dtype=bool)
-                    keep[empty_j] = False
-                    u, uc = u[keep], uc[keep]
-                order = np.argsort(u, kind="stable")
-                u, uc = u[order], uc[order]
-                # collapse dictionary slots that hash to the same id
-                starts = np.flatnonzero(np.r_[True, u[1:] != u[:-1]])
-                if len(starts) < len(u):
-                    u = u[starts]
-                    uc = np.add.reduceat(uc, starts)
-                for s in preagg_targets:
-                    s.update_batch(u, uc)
-                n_batch = int(uc.sum())
-            if raw_targets:
-                if empty_j >= 0:
-                    # drop empty-string tokens by DICTIONARY slot (not by
-                    # hashed id), so a real token whose hash collides with
-                    # h("") survives — same rule as the preagg path above
-                    ids = lut[idx[idx != empty_j]]
-                else:
-                    ids = lut[idx]
-                for s in raw_targets:
-                    s.update_batch(ids)
-                n_batch = len(ids)
+            # map-side combine: a Zipf token batch of ~500k collapses to
+            # ~10k (token, count) pairs, and every sketch folds the
+            # pairs exactly as it would the raw id stream
+            vc = pc.value_counts(toks)
+            vocab = vc.field("values")
+            u = keys.xxh64_array(vocab) & keys.MASK32
+            uc = vc.field("counts").to_numpy()
+            empty_j = pc.index(vocab, "").as_py()
+            if empty_j >= 0:
+                # drop empty-string tokens (parity with keys.tokens
+                # filter) by slot, so a real token whose hash collides
+                # with h("") survives
+                u, uc = np.delete(u, empty_j), np.delete(uc, empty_j)
+            order = np.argsort(u, kind="stable")
+            u, uc = u[order], uc[order]
+            # collapse slots that hash to the same id
+            starts = np.flatnonzero(np.r_[True, u[1:] != u[:-1]])
+            if len(starts) < len(u):
+                u = u[starts]
+                uc = np.add.reduceat(uc, starts)
+            sk.update_batch(u, uc)
             n_rows += len(texts)
-            n_upd += n_batch
+            n_upd += int(uc.sum())
         ctx = TaskContext.get()
         raw = sk.to_bytes()
         state = pack_state_bytes(raw)  # ship packed; account raw (SPACE)

@@ -109,14 +109,13 @@ def test_dirfold_missing_partition_raises(tmp_path):
 
 
 def test_fused_preagg_routing_mixed_template(spark):
-    """The map-side duplicate collapse (PREAGG_SAFE routing) must leave
-    every sketch's SEMANTICS intact when a template mixes safe and
-    unsafe sketches: linear sketches stay byte-identical to the
-    exploded Catalyst path, and KLL — routed down the raw-id path
-    because collapsing duplicates would change its sampled stream —
-    must still see the full duplicated token stream (its rank
-    estimates match the true stream ranks, not the distinct-value
-    ranks, which differ grossly on a Zipf-weighted vocabulary)."""
+    """The map-side duplicate collapse must leave every sketch's
+    SEMANTICS intact on a mixed template: linear sketches stay
+    byte-identical to the exploded Catalyst path, and KLL — which folds
+    the collapsed (id, count) pairs as the repeated stream — must still
+    weigh the full duplicated token stream (its rank estimates match
+    the true stream ranks, not the distinct-value ranks, which differ
+    grossly on a Zipf-weighted vocabulary)."""
     from heavy_hitters_spark.core import KLL, MisraGries
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -141,7 +140,7 @@ def test_fused_preagg_routing_mixed_template(spark):
         exact[int(i)] = exact.get(int(i), 0) + 1
     n = len(ids)
 
-    # MG (preagg path, bounds-level contract): undercount <= norm/(k+1)
+    # MG (bounds-level contract): undercount <= norm/(k+1)
     mg = fused["mg"]
     assert mg.norm == n
     top = sorted(exact.items(), key=lambda kv: -kv[1])[:20]
@@ -150,9 +149,9 @@ def test_fused_preagg_routing_mixed_template(spark):
         assert e <= cnt
         assert cnt - e <= mg.norm // (mg.k + 1) + 1
 
-    # KLL (raw path): must have consumed the RAW duplicated stream —
-    # its internal weight n equals the stream length, not the distinct
-    # count (a collapsed feed would record ~n_distinct) — and its
+    # KLL: must have weighed the full duplicated stream — its internal
+    # weight n equals the stream length, not the distinct count (a
+    # feed that ignored counts would record ~n_distinct) — and its
     # stream-rank estimates stay inside the error bound.
     kll = fused["kll"]
     assert kll.n == n
@@ -166,20 +165,25 @@ def test_fused_preagg_routing_mixed_template(spark):
 
 def test_raw_path_empty_filter_is_slot_based(monkeypatch):
     """A real token whose xxh64&MASK32 collides with h("") must SURVIVE
-    the raw (non-PREAGG_SAFE) path's empty-token filter, matching the
-    preagg path's dictionary-slot rule — the round-5 code filtered the
-    hashed id array by value and silently dropped such a token. Forced
-    by monkeypatching the hash so 'collider' == h(''), and calling the
-    fused kernel in-process (no Spark needed)."""
+    the kernel's empty-token filter: empty tokens are dropped by their
+    vocabulary slot, not by hashed value (the round-5 raw path filtered
+    the hashed id array by value and silently dropped such a token).
+    Forced by monkeypatching the vectorized hash so 'collider' ==
+    h(''), and calling the fused kernel in-process (no Spark needed)."""
     from heavy_hitters_spark.core import KLL
     from heavy_hitters_spark.core.base import pack_state, unpack_state
     from heavy_hitters_spark.spark import keys as keys_mod
     from heavy_hitters_spark.spark.fused import _fused_fn
 
-    real = keys_mod.xxh64
-    monkeypatch.setattr(
-        keys_mod, "xxh64", lambda b: real(b"") if b == b"collider" else real(b)
-    )
+    real = keys_mod.xxh64_array
+    h_empty = keys_mod.xxh64(b"")
+
+    def colliding(arr):
+        h = real(arr)
+        h[np.array(arr.to_pylist()) == "collider"] = h_empty
+        return h
+
+    monkeypatch.setattr(keys_mod, "xxh64_array", colliding)
 
     import pyarrow as pa
 
@@ -190,6 +194,58 @@ def test_raw_path_empty_filter_is_slot_based(monkeypatch):
     assert out.column("n_updates")[0].as_py() == 3  # r5 code recorded 1
     kll = unpack_state(out.column("state")[0].as_py())
     assert kll.n == 3
+
+
+def _reference_kernel(template, batches, text_col="text"):
+    """Loop reference for ``_fused_fn``: str.split(" "), drop "", hash
+    each token with key_id, one raw ``update_batch(ids)`` per batch."""
+    from heavy_hitters_spark.spark.keys import key_id
+
+    n_upd = 0
+    for b in batches:
+        toks = [t for text in b.column(text_col).to_pylist() if text is not None
+                for t in text.split(" ") if t != ""]
+        ids = np.array([key_id(t) for t in toks], dtype=np.uint64)
+        template.update_batch(ids)
+        n_upd += len(ids)
+    return template.to_bytes(), n_upd
+
+
+def test_kernel_matches_loop_reference():
+    """The fused kernel's state bytes and update count equal the
+    per-token loop reference's for the benchmark's 6-sketch template,
+    a bare KLL and a bare CountMin; over repeated spaces, an empty
+    batch, several batches and a large_string text column."""
+    import pyarrow as pa
+
+    import bench
+    from heavy_hitters_spark.core import KLL
+    from heavy_hitters_spark.core.base import pack_state, unpack_state
+    from heavy_hitters_spark.spark.fused import _fused_fn
+
+    rng = np.random.default_rng(5)
+    vocab = np.array([f"w{i}" for i in range(300)] + ["é", "日本", "x" * 40])
+    texts = [" ".join(vocab[(rng.zipf(1.3, int(rng.integers(1, 60))) - 1) % len(vocab)])
+             for _ in range(400)]
+    texts[:4] = ["  a   b  ", " ", "", "a b"]  # repeated / leading / trailing spaces
+    tab = pa.table({"text": texts})
+    cases = {
+        "batches": tab.to_batches(max_chunksize=64),
+        "empty": [pa.RecordBatch.from_pydict({"text": pa.array([], pa.string())})] + tab.to_batches(),
+        "large": tab.cast(pa.schema([("text", pa.large_string())])).to_batches(max_chunksize=100),
+    }
+    templates = {
+        "bench": bench._tmpl,
+        "kll": lambda: KLL(k=50, seed=3),
+        "cm": lambda: CountMin(width=1 << 10, depth=4, seed_stream=SeedStream(1, 2)),
+    }
+    for tname, make in templates.items():
+        for cname, batches in cases.items():
+            (out,) = list(_fused_fn(pack_state(make()), "text")(iter(batches)))
+            got = unpack_state(out.column("state")[0].as_py()).to_bytes()
+            want, n_upd = _reference_kernel(make(), batches)
+            assert got == want, (tname, cname)
+            assert out.column("n_updates")[0].as_py() == n_upd, (tname, cname)
 
 
 def test_prepared_builder_matches_one_shot(spark):

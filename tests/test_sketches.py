@@ -160,6 +160,36 @@ def test_kll_rank_error(rng):
     assert np.all(np.abs(est - qs * n) <= 0.02 * n)
 
 
+@pytest.mark.parametrize("k", [2, 3, 8, 57, 200, 300])
+def test_kll_weighted_equals_repeated_stream(k, rng):
+    """update_batch(items, counts) must leave the byte-identical state of
+    update_batch(np.repeat(items, counts)) — over several batches, with
+    zero counts, odd totals, and unsorted items with duplicate values —
+    and grow n by counts.sum()."""
+    a, b = KLL(k=k, seed=k), KLL(k=k, seed=k)
+    n = 0
+    for cap in (1, 2, 7, 300, 5000, 3):
+        m = int(rng.integers(0, 400))
+        items = rng.integers(0, 60, m).astype(np.uint64)  # unsorted, repeats
+        counts = rng.integers(0, cap + 1, m)  # zeros included
+        a.update_batch(items, counts)
+        b.update_batch(np.repeat(items, counts))
+        n += int(counts.sum())
+        assert a.n == b.n == n
+        assert a.to_bytes() == b.to_bytes()
+    odd = np.array([5, 1, 5], dtype=np.uint64), np.array([3, 4, 2])  # total 9
+    a.update_batch(*odd)
+    b.update_batch(np.repeat(*odd))
+    assert a.to_bytes() == b.to_bytes()
+
+
+def test_kll_negative_count_rejected():
+    kll = KLL(k=50)
+    with pytest.raises(ValueError, match="non-negative"):
+        kll.update_batch(np.array([1, 2], dtype=np.uint64), np.array([3, -1]))
+    assert kll.n == 0
+
+
 def test_serde_roundtrip_all(micro_pairs, rng):
     items, w = micro_pairs
     data = rng.integers(0, 1000, 10000, dtype=np.uint64)
@@ -298,7 +328,7 @@ def test_misra_gries_weighted_equals_collapsed_and_reference(rng):
     """The weighted update path (argsort + reduceat batch collapse,
     round-5 rewrite) must be byte-identical to (a) feeding the batch
     pre-collapsed to sorted (unique, counts) — the map-side-combine
-    contract PREAGG_SAFE relies on — and (b) the straightforward
+    contract spark/fused.py relies on — and (b) the straightforward
     unique(return_inverse) + add.at reference collapse it replaced.
     Also: a weighted batch of unit counts == the unweighted path."""
     items = (rng.zipf(1.3, 20000) % 3000).astype(np.uint64)

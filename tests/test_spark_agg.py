@@ -147,10 +147,38 @@ def test_hll_distributed_merge(spark, ids_df):
 
 
 def test_driver_side_key_parity(spark):
-    df = spark.createDataFrame([("alpha",), ("beta",), ("tok123",)], "token string")
+    import pyarrow as pa
+
+    from heavy_hitters_spark.spark.keys import MASK32, xxh64_array
+
+    toks = ["alpha", "beta", "tok123", "", "é日本", "x" * 33, "y" * 64 + "z"]
+    df = spark.createDataFrame([(t,) for t in toks], "token string")
     rows = df.withColumn("id", key_id_col("token")).collect()
     for r in rows:
         assert key_id(r["token"]) == r["id"]
+    got = xxh64_array(pa.array([r["token"] for r in rows])) & MASK32
+    assert got.tolist() == [r["id"] for r in rows]
+
+
+def test_xxh64_array_matches_scalar():
+    """The vectorized hash equals ``xxh64`` slot by slot: lengths 0-80
+    (crossing the 4-, 8- and 32-byte steps), multi-byte UTF-8, a sliced
+    array (non-zero offset), large_string and binary."""
+    import pyarrow as pa
+
+    from heavy_hitters_spark.spark.keys import xxh64, xxh64_array
+
+    rng = np.random.default_rng(3)
+    strs = ["".join(chr(97 + int(c)) for c in rng.integers(0, 26, n)) for n in range(81)]
+    strs += ["", "é", "日本語のテキスト", "ü" * 20, "ü" * 33]
+    want = np.array([xxh64(s.encode()) for s in strs], dtype=np.uint64)
+    for typ in (pa.string(), pa.large_string()):
+        arr = pa.array(strs, type=typ)
+        assert np.array_equal(xxh64_array(arr), want)
+        assert np.array_equal(xxh64_array(arr.slice(9, 60)), want[9:69])
+    blobs = pa.array([s.encode() for s in strs], type=pa.binary())
+    assert np.array_equal(xxh64_array(blobs), want)
+    assert xxh64_array(pa.array([], pa.string())).dtype == np.uint64
 
 
 def _side_dirs():
