@@ -8,13 +8,18 @@ high core counts and kills scaling). This fused path ships one row per
 DOCUMENT and does tokenization in pyarrow C kernels inside the worker:
 
   scan (column-pruned text)
-    -> mapInArrow: split_pattern -> list_flatten -> value_counts
-       (all Arrow C) -> keys.xxh64_array over the batch vocabulary
-       (numpy, no per-token Python)
+    -> mapInArrow: token slots (a zero-copy string view over the
+       batch's own text buffer, one slot per token plus at most one
+       trailing space; numpy over the offsets and bytes)
+       -> value_counts (Arrow C) -> rtrim " " and drop empty tokens
+       -> keys.xxh64_array over the ~10k-entry batch vocabulary
+       (numpy, no per-token Python) -> sum entries by id
     -> one sketch update per batch on the (unique id, count) pairs
-       (a Zipf batch of ~500k tokens collapses to ~10k pairs; every
+       (a Zipf batch of ~2M tokens collapses to ~10k pairs; every
        sketch, KLL included, folds them exactly as the raw id stream)
-    -> one serialized state row per partition
+    -> one state per partition: a raw HHS1 blob published into the
+       side-channel directory, or a zlib-packed state row when the
+       states are collected
 
 The ids are the same xxhash64&mask32 ids as spark.keys.key_id_col, so
 fused-built sketches are interchangeable with explode-built ones
@@ -44,10 +49,50 @@ from .aggregate import PARTIAL_SCHEMA, Build
 _ARROW_PARTIAL_SCHEMA = to_arrow_schema(PARTIAL_SCHEMA)
 
 
+def _token_counts(texts: pa.Array) -> tuple[pa.Array, np.ndarray]:
+    """Distinct ``" "``-separated tokens of a string / large_string array
+    and their counts, empty tokens dropped — the tokens of
+    ``split(" ")``, without copying them into a list array.
+
+    A zero-copy "slot" view over the array's own data buffer has a slot
+    boundary at every document start and after every space byte, so
+    each slot is one token plus at most one trailing space (byte 0x20
+    never occurs inside a multi-byte UTF-8 sequence). ``value_counts``
+    runs over the slots; the ~10k distinct entries are then right-
+    trimmed, so a token may appear twice ("tok" and "tok " slots) and
+    the caller sums entries by id. Empty tokens ("" and " " slots) are
+    dropped by slot, before hashing, so a real token whose hash
+    collides with h("") survives."""
+    if texts.null_count:
+        texts = texts.fill_null("")  # a null slot may span bytes
+    _, obuf, dbuf = texts.buffers()
+    if len(texts) == 0 or dbuf is None:
+        return pa.array([], texts.type), np.empty(0, np.int64)
+    off = np.frombuffer(obuf, np.int64 if pa.types.is_large_string(texts.type) else np.int32)
+    off = off[texts.offset : texts.offset + len(texts) + 1]
+    lo, hi = int(off[0]), int(off[-1])
+    # slot starts: every document start (off[0] included) and every
+    # byte after a space
+    is_start = np.empty(hi - lo + 1, dtype=bool)
+    np.equal(np.frombuffer(dbuf, np.uint8, hi - lo, lo), 32, out=is_start[1:])
+    is_start[off - lo] = True
+    bounds = np.flatnonzero(is_start).astype(off.dtype, copy=False)
+    bounds += lo
+    slots = pa.Array.from_buffers(
+        texts.type, len(bounds) - 1, [None, pa.py_buffer(bounds), dbuf]
+    )
+    vc = pc.value_counts(slots)
+    vocab = pc.utf8_rtrim(vc.field("values"), characters=" ")
+    counts = vc.field("counts").to_numpy()
+    keep = pc.binary_length(vocab).to_numpy() > 0
+    if not keep.all():
+        vocab, counts = vocab.filter(pa.array(keep)), counts[keep]
+    return vocab, counts
+
+
 def _fused_fn(
     template_bytes: bytes,
     text_col: str,
-    split: str = " ",
     blob_col: str | None = None,
     side_dir: str | None = None,
     path_col: str | None = None,
@@ -107,39 +152,29 @@ def _fused_fn(
 
         for batch in text_batches():
             texts = batch.column(text_col)
-            toks = pc.list_flatten(pc.split_pattern(texts, split))
-            if len(toks) == 0:
+            n_rows += len(texts)
+            vocab, uc = _token_counts(texts)
+            if len(uc) == 0:
                 continue
-            # map-side combine: a Zipf token batch of ~500k collapses to
-            # ~10k (token, count) pairs, and every sketch folds the
-            # pairs exactly as it would the raw id stream
-            vc = pc.value_counts(toks)
-            vocab = vc.field("values")
             u = keys.xxh64_array(vocab) & keys.MASK32
-            uc = vc.field("counts").to_numpy()
-            empty_j = pc.index(vocab, "").as_py()
-            if empty_j >= 0:
-                # drop empty-string tokens (parity with keys.tokens
-                # filter) by slot, so a real token whose hash collides
-                # with h("") survives
-                u, uc = np.delete(u, empty_j), np.delete(uc, empty_j)
             order = np.argsort(u, kind="stable")
             u, uc = u[order], uc[order]
-            # collapse slots that hash to the same id
+            # collapse entries that hash to the same id: "tok" and
+            # "tok " slots, and true hash collisions
             starts = np.flatnonzero(np.r_[True, u[1:] != u[:-1]])
             if len(starts) < len(u):
                 u = u[starts]
                 uc = np.add.reduceat(uc, starts)
             sk.update_batch(u, uc)
-            n_rows += len(texts)
             n_upd += int(uc.sum())
         ctx = TaskContext.get()
         raw = sk.to_bytes()
-        state = pack_state_bytes(raw)  # ship packed; account raw (SPACE)
-        if side_dir is not None:
+        if side_dir is None:
+            state = pack_state_bytes(raw)  # collected: ship packed; account raw (SPACE)
+        else:
             from .aggregate import publish_state_file
 
-            publish_state_file(side_dir, state, ctx)
+            publish_state_file(side_dir, raw, ctx)
             state = b""
         yield pa.RecordBatch.from_pydict(
             {
@@ -162,12 +197,13 @@ class TokenSketchBuilder(Build):
     times (the micro-batch / scheduled-rebuild production shape).
 
     ``build_token_sketch`` constructs a fresh DataFrame per call, so
-    every build re-pays driver-side analysis + task-closure setup —
-    measured ~0.35 s of pure per-job serial on this host (time from
-    action start to the first task entering the worker: 0.45 s cold
-    vs 0.09-0.12 s re-collecting the same DataFrame object, whose
-    analyzed/optimized plan Spark caches). For a one-shot build that
-    cost is irrelevant; for repeated builds over a stable input
+    every build re-pays driver-side analysis + task-closure setup
+    (re-collecting the same DataFrame object reuses the analyzed/
+    optimized plan Spark caches). Measured on a 4-CPU host, 200k cached
+    pages in 16 partitions at local[4], 10 interleaved rounds: one-shot
+    1.36 s vs prepared 1.29 s median, a per-round difference of 56 ms
+    median (-36 to 201 ms). For a one-shot build that cost is
+    irrelevant; for repeated builds over a stable input
     (streaming micro-batches, per-window rebuilds, benchmarking) it is
     a pure Amdahl term, so this builder keeps ONE partials DataFrame
     with a FIXED side-channel directory and re-collects it per run

@@ -343,3 +343,123 @@ def test_materialize_arrow_files_empty_partition(spark, tmp_path):
     )
     assert m["n_rows"] == 2
     assert m["n_updates"] == 5
+
+
+def _split_reference(arr):
+    """Per-token counts of ``split_pattern(arr, " ")`` with "" dropped."""
+    import pyarrow.compute as pc
+
+    vc = pc.value_counts(pc.list_flatten(pc.split_pattern(arr, " ")))
+    return {t: c for t, c in zip(vc.field("values").to_pylist(), vc.field("counts").to_pylist())
+            if t != ""}
+
+
+def test_token_slots_match_split_pattern():
+    """The split-free token-slot tokenizer gives split(" ")'s per-token
+    counts on every layout the Arrow text buffer can have: repeated,
+    leading and trailing spaces, "" and " " documents, nulls (also a
+    null slot over non-empty bytes), an all-null array, multi-byte
+    UTF-8, a sliced array and large_string."""
+    import pyarrow as pa
+
+    from heavy_hitters_spark.spark.fused import _token_counts
+
+    spaces = ["  a   b  ", " a", "b ", "a  b", "a", "   "]
+    data = b"x yz" + b"zz  nul " + b"nul ok ok"
+    offsets = np.array([0, 4, 12, 21], dtype=np.int32)  # slot 1 ("zz  nul ") is null
+    null_over_bytes = pa.Array.from_buffers(
+        pa.string(), 3, [pa.py_buffer(np.packbits([1, 0, 1], bitorder="little")),
+                         pa.py_buffer(offsets), pa.py_buffer(data)])
+    assert null_over_bytes.to_pylist() == ["x yz", None, "nul ok ok"]
+    wide = pa.array(["skip me", "c  d", " é 日本  ü ", "", "e", "f g", "tail x"])
+    cases = {
+        "spaces": pa.array(spaces),
+        "empty_and_space": pa.array(["", " ", "", " "]),
+        "nulls": pa.array(["a b", None, "", None, "b  c"]),
+        "null_over_bytes": null_over_bytes,
+        "all_null": pa.array([None, None, None], pa.string()),
+        "utf8": pa.array(["é 日本  ü", "日本 é", "ü"]),
+        "sliced": wide.slice(1, 5),
+        "large": pa.array(spaces + [None, "é  日本 "], pa.large_string()),
+        "sliced_large": pa.array(["x y", "a b  c", "d"], pa.large_string()).slice(1),
+        "no_rows": pa.array([], pa.string()),
+    }
+    for name, arr in cases.items():
+        vocab, counts = _token_counts(arr)
+        assert "" not in vocab.to_pylist(), name
+        got: dict = {}
+        for t, c in zip(vocab.to_pylist(), counts.tolist()):
+            got[t] = got.get(t, 0) + c
+        assert got == _split_reference(arr), name
+    assert _token_counts(cases["sliced"])[1].sum() == 8  # c d é 日本 ü e f g
+
+
+def test_n_rows_counts_batches_without_tokens():
+    """Every input row is counted, also in a batch that holds no token
+    (all null): an all-null batch followed by a normal batch gives the
+    same n_rows, n_updates and state as the two concatenated."""
+    import pyarrow as pa
+
+    from heavy_hitters_spark.core.base import pack_state
+    from heavy_hitters_spark.spark.fused import _fused_fn
+
+    nulls = pa.RecordBatch.from_pydict({"text": pa.array([None, None, None], pa.string())})
+    normal = pa.RecordBatch.from_pydict({"text": pa.array(["a b", "b  c", ""])})
+    joined = pa.Table.from_batches([nulls, normal]).combine_chunks().to_batches()
+    assert len(joined) == 1
+    tb = pack_state(CountMin(width=1 << 8, depth=3, seed_stream=SeedStream(1, 2)))
+    (split_out,) = list(_fused_fn(tb, "text")(iter([nulls, normal])))
+    (joined_out,) = list(_fused_fn(tb, "text")(iter(joined)))
+    for col in ("n_rows", "n_updates", "state"):
+        assert split_out.column(col)[0].as_py() == joined_out.column(col)[0].as_py(), col
+    assert split_out.column("n_rows")[0].as_py() == 6
+    assert split_out.column("n_updates")[0].as_py() == 4
+
+
+def test_side_channel_states_are_raw(tmp_path):
+    """Side-channel tasks publish the raw HHS1 blob (the file never
+    crosses the collect, so it is not zlib-packed); collected rows stay
+    packed HHZ1; DirFold folds a mix of raw and packed files to the
+    same bytes as an all-packed directory."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from heavy_hitters_spark.core.base import pack_state, unpack_state
+    from heavy_hitters_spark.spark.aggregate import DirFold, _partial_fn
+    from heavy_hitters_spark.spark.fused import _fused_fn
+
+    tb = pack_state(_tmpl())
+    batch = pa.RecordBatch.from_pydict({"text": ["a b a", "c"]})
+    ids = pd.DataFrame({"id": np.arange(50, dtype=np.int64)})
+    runs = {
+        "fused": lambda side: list(_fused_fn(tb, "text", side_dir=side)(iter([batch])))[0]
+        .column("state")[0].as_py(),
+        "partial": lambda side: next(_partial_fn(tb, "id", None, side_dir=side)(iter([ids])))
+        ["state"][0],
+    }
+    for name, run in runs.items():
+        side = tmp_path / name
+        side.mkdir()
+        assert run(str(side)) == b""
+        (f,) = list(side.iterdir())
+        assert f.name == "state_p0_a0.bin"
+        assert f.read_bytes()[:4] == b"HHS1", name
+        assert run(None)[:4] == b"HHZ1", name  # collected rows stay packed
+
+    sks = []
+    for p in range(4):
+        sk = _tmpl()
+        sk.update_batch(np.arange(p * 10, p * 10 + 25, dtype=np.uint64))
+        sks.append(sk)
+    packed, mixed = tmp_path / "packed", tmp_path / "mixed"
+    packed.mkdir()
+    mixed.mkdir()
+    for p, sk in enumerate(sks):
+        (packed / f"state_p{p}_a0.bin").write_bytes(pack_state(sk))
+        (mixed / f"state_p{p}_a0.bin").write_bytes(sk.to_bytes() if p % 2 else pack_state(sk))
+    want = DirFold(str(packed)).finish(set(range(4))).to_bytes()
+    assert DirFold(str(mixed)).finish(set(range(4))).to_bytes() == want
+    acc = unpack_state(pack_state(sks[0]))
+    for sk in sks[1:]:
+        acc = acc.merge(sk)
+    assert want == acc.to_bytes()
